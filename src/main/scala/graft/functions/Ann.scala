@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate nearest neighbours over an Array[Float] embedding column
@@ -66,7 +65,7 @@ object Ann {
     */
   private val lshTargetBucket = 32L
 
-  private def autoBits(n: Long): Int =
+  private[graft] def autoBits(n: Long): Int =
     math.max(6, 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1L, (n - 1) / lshTargetBucket)))
 
@@ -81,10 +80,7 @@ object Ann {
       .limit(k)
 
   /** All LSH candidate pairs with exact cosine scores, UNRANKED —
-    * the shared core: global-top-k ranks it (TakeOrdered), per-vector
-    * top-k windows it per qid. Kept separate because ranking the full
-    * candidate set globally just to re-rank per vector costs a global
-    * sort for nothing (measured 5.5 s → ~2 s on q_sim_ann_neighbors).
+    * [[approxCosineTopK]] ranks them with one TakeOrdered.
     */
   private[graft] def scoredCandidates(df: DataFrame, idCol: String,
       vecCol: String, dim: Int, bits: Int, tables: Int,
@@ -211,27 +207,45 @@ object Ann {
       .limit(k)
   }
 
-  /** Per-query top-k: for every vector, its k nearest candidates. */
+  /** Per-query top-k: for every vector, its k nearest candidates —
+    * the vectors sharing at least one (table, signature) bucket with
+    * it — as (qid, nid, cos, rnk) ranked by (cos DESC, nid ASC).
+    *
+    * Each bucket becomes one member block (autoBits keeps its expected
+    * occupancy near `lshTargetBucket`), and the block kernel
+    * ([[BlockTopK.neighbours]]) scores every pair inside it once, in-row,
+    * keeping each member's top-k within the block. A vector's final
+    * top-k is the merge of its per-block lists, each neighbour once
+    * ([[BlockTopK.merge]]). That is exact for the candidate set: a
+    * neighbour in the true top-k has fewer than k better candidates
+    * overall, so fewer than k in any block it shares with the query,
+    * and it is in that block's list; a pair that meets in several
+    * tables scores identically in each. Nothing pair-sized is ever a
+    * row: the bucket shuffle carries each vector once per table, the
+    * merge shuffle at most one k-entry list per (vector, block).
+    * Ids must be integral (they are ranked as bigint).
+    */
   def approxNeighbors(df: DataFrame, idCol: String, vecCol: String,
       k: Int, dim: Int = 64, bits: Int = 0, tables: Int = 32,
       seed: Long = 42L): DataFrame = {
-    val pairs = scoredCandidates(df, idCol, vecCol, dim, bits,
-      tables, seed, probes = 0)
-    // candidates are symmetric: expand to both directions IN-ROW (one
-    // explode over a 2-element array). A union-of-self here made
-    // Catalyst materialize the whole bucket-join + scoring pipeline
-    // TWICE — the same recompute trap q_rec_item_neighbors documents
-    // (measured on q_sim_ann_neighbors: 2.2 s → ~1.4 s at sf0.1).
-    val directed = pairs.select(explode(array(
-        struct(col("id1").as("qid"), col("id2").as("nid"), col("cos")),
-        struct(col("id2").as("qid"), col("id1").as("nid"), col("cos"))))
-        .as("p"))
-      .select(col("p.qid").as("qid"), col("p.nid").as("nid"),
-        col("p.cos").as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    directed.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val nBits = if (bits > 0) bits else autoBits(df.count())
+    val idType = df.schema(idCol).dataType
+    // a NULL id never ranks as a candidate, as under `id1 < id2`
+    val blocks = withNorm(df, idCol, vecCol)
+      .filter(col("id").isNotNull)
+      .select(struct(col("id").cast("long"), col("e"), col("nrm")).as("m"),
+        posexplode(Native.lshSignatures(col("e"), dim, nBits, tables, seed))
+          .as(Seq("tbl", "sig")))
+      .groupBy("tbl", "sig")
+      .agg(collect_list(col("m")).as("ms"))
+    blocks.select(explode(BlockTopK.neighbours(col("ms"), k)).as("b"))
+      .groupBy(col("b.qid").as("qid"))
+      .agg(collect_list(col("b.top")).as("tops"))
+      .select(col("qid"), posexplode(BlockTopK.merge(col("tops"), k))
+        .as(Seq("pos", "t")))
+      .select(col("qid").cast(idType).as("qid"),
+        col("t.id").cast(idType).as("nid"), col("t.cos").as("cos"),
+        (col("pos") + 1).as("rnk"))
       .orderBy("qid", "rnk")
   }
 }

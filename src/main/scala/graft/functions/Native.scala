@@ -257,6 +257,64 @@ case class LshSignaturesF(child: Expression, dim: Int, bits: Int,
       newChild: Expression): LshSignaturesF = copy(child = newChild)
 }
 
+/** `array<T> → bigint` 64-bit SimHash: every element hashes with
+  * Spark's `xxhash64` (seed 42 — NULL elements hash to the seed, as
+  * the built-in does), each hash votes ±1 per bit into a primitive
+  * `long[64]`, and bit b of the signature is set iff its vote is
+  * positive. An empty array gives 0; a NULL array gives NULL. Bit for
+  * bit the former higher-order form (`aggregate` over `zip_with` of a
+  * 64-element vote array per token, then a fold packing the signs),
+  * which built and zipped two 64-element arrays for every token.
+  */
+case class SimHash64(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  // inferred as Seq[AbstractDataType] (that type is private[sql])
+  override def inputTypes = Seq(ArrayType)
+
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+
+  override def prettyName: String = "simhash64"
+
+  @transient private lazy val elementType: DataType =
+    child.dataType.asInstanceOf[ArrayType].elementType
+
+  def simhash(a: ArrayData): Long = {
+    val votes = new Array[Long](64)
+    val n = a.numElements()
+    var i = 0
+    while (i < n) {
+      val v = if (a.isNullAt(i)) null else a.get(i, elementType)
+      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(v, elementType, 42L)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1L else votes(b) -= 1L
+        b += 1
+      }
+      i += 1
+    }
+    var sig = 0L
+    var b = 0
+    while (b < 64) {
+      if (votes(b) > 0L) sig |= 1L << b
+      b += 1
+    }
+    sig
+  }
+
+  override def nullSafeEval(a: Any): Any = simhash(a.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("simhashExpr", this,
+      classOf[SimHash64].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.simhash($a);")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): SimHash64 = copy(child = newChild)
+}
+
 /** `array<string> × array<string> → bigint` intersection SIZE of two
   * sorted-ascending, element-distinct, non-null-element arrays, as a
   * single merge walk — O(|a|+|b|) UTF8String binary comparisons with

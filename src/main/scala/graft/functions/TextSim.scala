@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.NativeColumn
 
 /** SimHash near-dup detection + document fingerprinting (SURVEY.md §2.8
   * breadth: "MinHash+LSH, SimHash, n-gram Jaccard" — the first two live
@@ -15,33 +16,17 @@ import org.apache.spark.sql.functions._
   */
 object TextSim {
 
-  /** 64-bit SimHash of a token-array column — pure Catalyst
-    * expressions, no per-row JVM UDF (this was the library's last
-    * one): the token array folds once into a 64-element vote array
-    * (zip_with adds each token hash's ±1 bit votes), and a second
-    * fold packs the vote signs into the signature. Token hash =
-    * xxhash64, deterministic across JVMs and runs (SURVEY.md A.6
-    * forbids runtime randomness); the declared q_dedup_simhash query
-    * keeps its own md5-derived 60-bit variant for oracle parity —
-    * this is the library form for callers who do not need a DuckDB
-    * twin. Higher-order functions do not enter whole-stage codegen,
-    * but they evaluate natively on array data with zero
-    * serialization boundary — the UDF paid a full Catalyst→JVM row
-    * conversion per call.
+  /** 64-bit SimHash of a token-array column, as one codegen'd native
+    * expression ([[SimHash64]]): each token's xxhash64 (seed 42)
+    * votes ±1 per bit into a primitive long[64], and the vote signs
+    * pack into the signature. Token hash = xxhash64, deterministic
+    * across JVMs and runs (SURVEY.md A.6 forbids runtime randomness);
+    * the declared q_dedup_simhash query keeps its own md5-derived
+    * 60-bit variant for oracle parity — this is the library form for
+    * callers who do not need a DuckDB twin.
     */
-  def simhash(tokens: Column): Column = {
-    val bitIdx = sequence(lit(0), lit(63))
-    val hashes = transform(tokens, t => xxhash64(t))
-    val votes = aggregate(hashes, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, transform(bitIdx, b =>
-        when(call_function("shiftright", h, b)
-          .bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))),
-        (a, v) => a + v))
-    aggregate(zip_with(votes, bitIdx, (v, b) =>
-      when(v > 0, call_function("shiftleft", lit(1L), b))
-        .otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
+  def simhash(tokens: Column): Column =
+    NativeColumn.wrap(SimHash64(NativeColumn.unwrap(tokens)))
 
   /** Hamming distance between two 64-bit signatures (codegen'd). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

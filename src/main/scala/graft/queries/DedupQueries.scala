@@ -1515,7 +1515,8 @@ object DedupQueries extends QSet {
       persistVn: Boolean = true) {
 
     /** Memoized √N-row (cell, members-array) frame the streaming kNN
-      * twins join against — built and persisted ONCE per index (the
+      * twins and the banded top-k's block kernel join against — built
+      * and persisted ONCE per index (the
       * per-serving-call persist accumulated un-releasable caches:
       * repeated knnQueryStream construction leaked a new √N-row frame
       * each time, releasable only by a global clearCache). Released
@@ -1544,8 +1545,10 @@ object DedupQueries extends QSet {
       * default) skips q's own cell — its members are scanned by the
       * within tier; external query vectors (incoming dedup, kNN
       * serving) pass true, since they are not members and their
-      * nearest cell is a candidate like any other. Each probe row
-      * CARRIES the querying vector (e1, n1): the scoring join
+      * nearest cell is a candidate like any other, and so does the
+      * banded top-k, whose own cell always passes the cap test
+      * (θ ≤ r gives cap = 1) so one pass covers within-cell pairs.
+      * Each probe row CARRIES the querying vector (e1, n1): the scoring join
       * consumes it in-row, so consumers never re-join a frame by id
       * just to re-attach what this pass already held — one less join
       * (and one less potential exchange) per operator, and on a
@@ -2162,29 +2165,46 @@ object DedupQueries extends QSet {
     * companion to [[cosineTopK]] (which refuses corpora past its
     * all-pairs guard). Same centroid/cap machinery as
     * [[embeddingDedupBanded]], with the threshold replaced by a
-    * data-derived GLOBAL floor:
-    *  1. Within-cell pairs are scored exhaustively (in-row at the
-    *     member self-join). Their k-th best rounded cosine L is a
-    *     floor on the true k-th best overall — any pair scoring below
-    *     L cannot displace the k already in hand.
-    *  2. A foreign cell C prunes for q iff its spherical cap
-    *     cos(max(0, θ(q,c_C) − r_C)) < L − 1e-3 (the slack dominates
-    *     the 4-dp rounding half-step plus float error, so a pruned
-    *     pair satisfies round(cos,4) < L strictly). Both endpoints of
-    *     any surviving pair probe each other's cell (cap ≥ its own
-    *     cosine ≥ L − ε), so `id1 < id2` inside the probe join emits
-    *     each candidate exactly once — no distinct, nothing pair-sized
-    *     shuffles.
-    *  3. If fewer than k within-cell pairs exist the floor is void and
-    *     every live cell is scanned (the exhaustive fallback — rare,
-    *     and still cell-partitioned).
-    * Union(within, cross) ⊇ every pair with rounded cosine ≥ the true
-    * k-th best, ranked by the same (cos DESC, id1, id2) total order —
-    * byte-identical to the guarded baseline, shared DuckDB oracle.
-    * The floor is ONE scalar collected from the persisted within
-    * frame (the componentReps one-scalar-per-round posture) and rides
-    * the probe pass's closure; hints on the member frame follow the
-    * count-guard pattern.
+    * data-derived GLOBAL floor and every pair scored in-row by the
+    * block kernel ([[graft.functions.BlockTopK]]):
+    *  1. Floor. The densest cells, picked driver-side from the index's
+    *     sizes map until they cover 16·k within-cell pairs, are scored
+    *     against themselves (each member's top-k inside its cell); the
+    *     k-th best of those pairs, L, is a floor on the true k-th best
+    *     overall — k pairs ≥ L exist, so a pair scoring below L cannot
+    *     displace them. Any subset gives a valid floor; only pruning
+    *     strength varies, and dense cells are where near-dup geometry
+    *     concentrates its best cosines. Fewer than k within-cell pairs
+    *     anywhere voids the floor (read off the sizes map, zero jobs):
+    *     nothing prunes and every live cell is scanned. The floor is
+    *     one scalar collected from one k-row TakeOrdered.
+    *  2. One probe pass, own cell INCLUDED. A cell C prunes for q iff
+    *     its spherical cap cos(max(0, θ(q,c_C) − r_C)) < L − 1e-3 (the
+    *     slack dominates the 4-dp rounding half-step plus float error,
+    *     so a pruned pair satisfies round(cos,4) < L strictly). q's own
+    *     cell always survives: θ(q,c_own) ≤ r_own, since the radius is
+    *     the maximum member angle, so its cap is cos(0) = 1 ≥ L − 1e-3
+    *     — this is what lets one pass replace a separate within-cell
+    *     self-join. For a pair (a, b) with round(cos) ≥ L, cap_a(C_b)
+    *     ≥ cos(a,b) ≥ L − ε, so a probes b's cell.
+    *  3. Each probe row (q, C) meets C's member block in the join and
+    *     the kernel scores q against the members with id > q only, so
+    *     every unordered pair is scored exactly once — at its smaller
+    *     id's probe of the larger id's cell — and nothing needs a
+    *     distinct. The kernel keeps q's top-k in that block at or above
+    *     L: under the total order (cos DESC, id1, id2), a pair outside
+    *     its (q, C) top-k has k better pairs in the same row, so it is
+    *     outside the global top-k too.
+    *  4. TakeOrdered keeps the top-k of each partition and merges them.
+    *     Per-partition top-k under a TOTAL order merges exactly: the
+    *     global top-k's members are each in their partition's top-k.
+    * So the candidates ⊇ every pair in the true top-k, ranked by the
+    * baseline's order — byte-identical to the guarded baseline, shared
+    * DuckDB oracle. Nothing pair-sized is materialized: the join emits
+    * one row per surviving (vector, cell) probe and the kernel at most
+    * k entries per row. The member blocks (`cellMembers`, memoized on
+    * the index) follow the count-guarded hint: broadcast under
+    * `wideHintCap` member rows, shuffled by cell past it.
     */
   def cosineTopKBanded(s: SparkSession, dir: String, k: Int,
       wideHintCap: Long = BroadcastHintMaxRows / 8): DataFrame =
@@ -2194,86 +2214,63 @@ object DedupQueries extends QSet {
     * [[loadCellIndex]]-loaded) index — the repeated-query shape. */
   private[graft] def cosineTopKBandedOn(ci: CellIndex, k: Int,
       wideHintCap: Long = BroadcastHintMaxRows / 8): DataFrame = {
-    def bcWide(df: DataFrame): DataFrame =
-      maybeBroadcast(df, ci.nVec, wideHintCap)
-    val within = ci.memVec
-      .select(col("vec_id").as("id1"), col("cell"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
-      .join(bcWide(ci.memVec.select(col("vec_id").as("id2"),
-        col("cell").as("c2"), col("embedding").as("e2"),
-        col("nrm").as("n2"))),
-        col("cell") === col("c2") && col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        pairCosCol(col("e1"), col("n1"), col("e2"), col("n2"))
-          .as("cos"))
-    // The floor derives from a BOUNDED subset of within-cell pairs —
-    // the densest cells, picked driver-side from the index's sizes
-    // map until they cover 16·k pairs (any subset's k-th best is a
-    // valid global floor: k pairs ≥ it exist, so nothing scoring
-    // below it can displace them; only pruning STRENGTH varies, and
-    // dense cells are where near-dup geometry concentrates its best
-    // cosines). The former shape took the k-th best of ALL within
-    // pairs, which persisted the ENTIRE within self-join before the
-    // probe pass could start; now the floor job self-joins only the
-    // selected cells' members, the within frame computes ONCE inside
-    // the final union, and the void-floor decision (prune nothing
-    // when fewer than k within pairs exist anywhere) costs zero jobs —
-    // it reads the sizes map. Interleaved same-JVM A/B medians
-    // (ABBench r11): 1.28 s vs 1.50 s at sf0.1; a TIE at the
-    // 10×-duplicated sf1.0 (9.8 s both) — decomposition there shows
-    // index 0.66 s + within 0.82 s, i.e. the family's slow sf1.0
-    // member is the CROSS tier's no-prune scoring on isotropic
-    // geometry (radii ≈ π/2 make every cap ≈ 1, the documented
-    // information-theoretic floor no exact method beats), not the
-    // floor derivation.
-    val totalPairs = ci.cellSizes.valuesIterator
-      .map(n => n * (n - 1) / 2).sum
-    val floorOpt: Option[Double] =
-      if (totalPairs < k) None
-      else {
-        val ordered = ci.cellSizes.toSeq
-          .sortBy { case (c, n) => (-n, c) }
-        val sel = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var acc = 0L
-        val it = ordered.iterator
-        while (acc < 16L * k && it.hasNext) {
-          val (c, n) = it.next()
-          if (n >= 2) { sel += c; acc += n * (n - 1) / 2 }
-        }
-        val fm = ci.memVec.filter(col("cell").isin(sel.toSeq: _*))
-        val fw = fm
-          .select(col("vec_id").as("id1"), col("cell"),
-            col("embedding").as("e1"), col("nrm").as("n1"))
-          .join(fm.select(col("vec_id").as("id2"),
-            col("cell").as("c2"), col("embedding").as("e2"),
-            col("nrm").as("n2")),
-            col("cell") === col("c2") && col("id1") < col("id2"))
-          .select(pairCosCol(col("e1"), col("n1"),
-            col("e2"), col("n2")).as("cos"))
-        // totalPairs ≥ k and the selection covers ≥ min(16k, total)
-        // pairs ≥ k, so the k-th best exists
-        Some(fw.orderBy(col("cos").desc).limit(k)
-          .agg(min(col("cos"))).head().getDouble(0))
-      }
+    val floorOpt = cosineTopKFloor(ci, k)
     // probe input from memVec, not vn: same rows, and the cached
     // member frame already carries (embedding, nrm) — vn stays a
     // label-only consumer so its cache is optional (persistVn)
     val probes = ci.probes(ci.memVec.select(col("vec_id"),
       col("embedding"), col("nrm"),
       floorOpt.map(lit(_)).getOrElse(lit(null))
-        .cast(DoubleType).as("floor")))
-    // probe rows carry (e1, n1) — the scoring join consumes them
-    // in-row, no id1 re-attach join
-    val cross = probes
-      .join(bcWide(ci.memVec.select(col("vec_id").as("id2"), col("cell"),
-        col("embedding").as("e2"), col("nrm").as("n2"))), Seq("cell"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        pairCosCol(col("e1"), col("n1"), col("e2"), col("n2"))
-          .as("cos"))
-    within.unionAll(cross)
+        .cast(DoubleType).as("floor")), includeOwn = true)
+    // probe rows carry (e1, n1): the kernel scores them in-row against
+    // the joined cell's member block
+    probes
+      .join(maybeBroadcast(ci.cellMembers, ci.nVec, wideHintCap),
+        Seq("cell"))
+      .select(col("id1"), explode(graft.functions.BlockTopK.queryTopK(
+        col("id1"), col("e1"), col("n1"), col("ms"), k, floorOpt)).as("p"))
+      .select(col("id1"), col("p.id").as("id2"), col("p.cos").as("cos"))
       .orderBy(col("cos").desc, col("id1"), col("id2"))
       .limit(k)
+  }
+
+  /** Step 1 of [[cosineTopKBanded]]: the k-th best within-cell pair
+    * cosine of the densest cells covering 16·k pairs, or None when
+    * fewer than k within-cell pairs exist (void floor) or the k-th
+    * pair scores NULL. Each member's in-cell top-k holds every pair of
+    * the cells' global top-k (a pair in it has fewer than k better
+    * pairs, so fewer than k better partners at either end), so the
+    * k-th best over those lists, each pair counted once by
+    * `qid < id`, is the exact k-th best.
+    */
+  private def cosineTopKFloor(ci: CellIndex, k: Int): Option[Double] = {
+    val totalPairs = ci.cellSizes.valuesIterator
+      .map(n => n * (n - 1) / 2).sum
+    if (totalPairs < k) None
+    else {
+      val ordered = ci.cellSizes.toSeq.sortBy { case (c, n) => (-n, c) }
+      val sel = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var acc = 0L
+      val it = ordered.iterator
+      while (acc < 16L * k && it.hasNext) {
+        val (c, n) = it.next()
+        if (n >= 2) { sel += c; acc += n * (n - 1) / 2 }
+      }
+      val top = ci.cellMembers
+        .filter(col("cell").isin(sel.toSeq: _*))
+        .select(explode(graft.functions.BlockTopK.neighbours(col("ms"),
+          k)).as("m"))
+        .select(col("m.qid").as("qid"), explode(col("m.top")).as("t"))
+        .filter(col("t.id") > col("qid"))
+        .select(col("t.cos").as("cos"))
+        .orderBy(col("cos").desc)
+        .limit(k)
+        .collect()
+      // the selection covers ≥ min(16k, total) ≥ k pairs, so the k-th
+      // best exists
+      if (top.length < k || top(k - 1).isNullAt(0)) None
+      else Some(top(k - 1).getDouble(0))
+    }
   }
 
   /** Shared representative tail of both embedding-dedup variants:

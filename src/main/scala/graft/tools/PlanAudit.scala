@@ -80,11 +80,13 @@ object PlanAudit {
         else graft.SparkEntry.queries.keys.toSeq.sorted
       names.foreach { k =>
         try {
+          // keyed on the FULL root path: two relations whose
+          // directories share a basename are different tables
           val scans = graft.SparkEntry.queries(k)(spark, sfDir)
             .queryExecution.optimizedPlan.collect {
               case l @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
                 h.location.rootPaths.headOption
-                  .map(_.getName).getOrElse("?")
+                  .map(_.toString).getOrElse("?")
             }
           val dups = scans.groupBy(identity).filter(_._2.size > 1)
           if (dups.nonEmpty)

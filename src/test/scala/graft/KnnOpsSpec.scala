@@ -329,6 +329,100 @@ class KnnOpsSpec extends AnyFunSuite
       floorFilterMinRows = 0L)) == brute)
   }
 
+  /** Writes an embeddings table of (vec_id, 64-float vector) rows,
+    * spread over 4 files, and returns its directory. */
+  private def embeddingsDir(prefix: String,
+      rows: Seq[(Long, Array[Float])]): String = {
+    import org.apache.spark.sql.types._
+    val dir = fixtureDir(prefix)
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding",
+        ArrayType(FloatType)), StructField("label", IntegerType)))
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (id, e) =>
+          org.apache.spark.sql.Row(id, e.toSeq, (id % 2).toInt) }, 4),
+        schema)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private def hashVec(id: Long, salt: Long): Array[Float] =
+    Array.tabulate(64) { j =>
+      var x = id * 0x9E3779B97F4A7C15L + (j + salt) * 0xC2B2AE3D27D4EB4FL
+      x ^= (x >>> 33); x *= 0xFF51AFD7ED558CCDL; x ^= (x >>> 29)
+      ((x >>> 11).toDouble / (1L << 53).toDouble - 0.5).toFloat
+    }
+
+  test("banded top-k on 0, 1, 2 and 4 vectors (fewer than k pairs, " +
+    "void floor) equals the brute-force top-k") {
+    def rt(df: org.apache.spark.sql.DataFrame) =
+      { val r = df.collect().map(_.toSeq).toSeq
+        spark.catalog.clearCache(); r }
+    import graft.queries.DedupQueries
+    for (n <- Seq(0, 1, 2, 4)) {
+      val dir = embeddingsDir(s"knn_n$n",
+        (0L until n.toLong).map(id => (id * 7 + 3, hashVec(id, 1))))
+      val brute = rt(DedupQueries.cosineTopK(spark, dir, 10))
+      assert(brute.length == n * (n - 1) / 2)
+      assert(rt(DedupQueries.cosineTopKBanded(spark, dir, 10)) == brute,
+        s"n=$n")
+      assert(rt(DedupQueries.cosineTopKBanded(spark, dir, 10,
+        wideHintCap = 0L)) == brute, s"n=$n past the hint cap")
+    }
+  }
+
+  test("banded top-k with every vector in ONE cell equals brute force") {
+    // centroids are the 16 vectors with the smallest xxhash64(id) mix;
+    // making all 16 the same vector ties every vector's centroid
+    // cosines, so all 60 vectors assign to the smallest centroid id —
+    // one cell, and every pair is scored through the own-cell probe.
+    // k = 130 reaches past the C(16,2) = 120 identical-centroid pairs
+    // (all 1.0) into distinct cosines, so the floor is a real one
+    import graft.queries.DedupQueries
+    import spark.implicits._
+    val ids = (0L until 60L).map(_ * 5 + 1)
+    val cents = ids.toDF("id").selectExpr("id", "xxhash64(id) mix")
+      .orderBy("mix", "id").limit(16).as[(Long, Long)].collect()
+      .map(_._1).toSet
+    val dir = embeddingsDir("knn_onecell", ids.map { id =>
+      (id, if (cents(id)) hashVec(0L, 9) else hashVec(id, 2)) })
+    val ci = DedupQueries.buildCellIndex(spark, dir)
+    assert(ci.cellSizes.size == 1 && ci.cellSizes.values.head == 60L,
+      ci.cellSizes.toString)
+    val banded = DedupQueries.cosineTopKBandedOn(ci, 130)
+      .collect().map(_.toSeq).toSeq
+    spark.catalog.clearCache()
+    val brute = DedupQueries.cosineTopK(spark, dir, 130)
+      .collect().map(_.toSeq).toSeq
+    assert(brute.length == 130 && brute.last(2) != 1.0)
+    spark.catalog.clearCache()
+    assert(banded == brute, s"banded=$banded brute=$brute")
+  }
+
+  test("banded top-k on duplicated vectors: rounded cosines tie across " +
+    "partitions and the tie order is id1, then id2") {
+    // 5 distinct vectors, each repeated 8 times under scattered ids:
+    // the 5·C(8,2) = 140 duplicate pairs all score exactly 1.0, so the
+    // top-10 is decided by (id1, id2) alone across the 4 input files
+    import graft.queries.DedupQueries
+    val rows = (0L until 40L).map(i => (i * 37 % 101, hashVec(i % 5, 3)))
+    val dir = embeddingsDir("knn_ties", rows)
+    val brute = DedupQueries.cosineTopK(spark, dir, 10)
+      .collect().map(_.toSeq).toSeq
+    spark.catalog.clearCache()
+    assert(brute.forall(_(2) == 1.0), brute.toString)
+    val want = rows.groupBy(_._2.toSeq).values.toSeq
+      .flatMap(g => g.map(_._1).sorted.combinations(2)
+        .map(p => (p(0), p(1))))
+      .sorted.take(10)
+    assert(brute.map(r => (r(0), r(1))) == want)
+    for (cap <- Seq(DedupQueries.BroadcastHintMaxRows / 8, 0L)) {
+      assert(DedupQueries.cosineTopKBanded(spark, dir, 10, cap)
+        .collect().map(_.toSeq).toSeq == brute, s"cap=$cap")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("cell-index artifact: banded operators from a LOADED index are " +
     "byte-identical to the in-memory build") {
     // the repeated-query production shape: build once, persist, load

@@ -242,6 +242,44 @@ class LibrarySpec extends AnyFunSuite {
       s"banding missed ${(truth -- cand).size} pairs with hamming <= 3")
   }
 
+  test("native simhash: bit-identical to a plain-Scala xxhash64 vote " +
+      "over the fixture documents, and on NULL / empty edges") {
+    def xx(t: String): Long =
+      if (t == null) 42L
+      else {
+        val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(b,
+          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+      }
+    def reference(toks: Seq[String]): Long = {
+      val votes = new Array[Long](64)
+      toks.foreach { t =>
+        val h = xx(t)
+        for (b <- 0 until 64)
+          votes(b) += (if (((h >>> b) & 1L) == 1L) 1L else -1L)
+      }
+      (0 until 64).foldLeft(0L) { (sig, b) =>
+        if (votes(b) > 0) sig | (1L << b) else sig }
+    }
+    val docs = Tables.t(spark, sf, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+    val got = docs.select(col("tk"), TextSim.simhash(col("tk")).as("sig"))
+      .collect()
+    assert(got.length > 0)
+    got.foreach { r =>
+      val toks = r.getSeq[String](0)
+      assert(r.getLong(1) == reference(toks), s"tokens $toks")
+    }
+    val edges = Seq(Seq("a", null, "b"), Seq.empty[String], null,
+        Seq(null, null))
+      .toDF("tk").select(col("tk"), TextSim.simhash(col("tk")).as("sig"))
+      .collect()
+    edges.foreach { r =>
+      if (r.isNullAt(0)) assert(r.isNullAt(1))
+      else assert(r.getLong(1) == reference(r.getSeq[String](0)))
+    }
+  }
+
   test("fingerprint: order-sensitive and deterministic") {
     val df = Seq(
       (1L, Seq("a", "b", "c")),
@@ -415,6 +453,98 @@ class LibrarySpec extends AnyFunSuite {
           (col("n1") * col("n2")), 4))
       .filter(col("cos") =!= col("cos2")).count()
     assert(recomputed == 0, s"$recomputed neighbour scores diverge")
+  }
+
+  test("per-vector ANN neighbours equal a plain-Scala enumeration of " +
+      "every pair sharing an LSH bucket (incl. multi-table collisions)") {
+    import graft.functions.Native
+    val base = Tables.t(spark, sf, "embeddings")
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
+    // near-copies of two vectors: each pair collides in most tables
+    val extra = base.take(2).zipWithIndex.map { case ((_, e), i) =>
+      (900000L + i, e.map(_ * 1.001f)) }
+    val all = base ++ extra
+    val df = all.toSeq.toDF("vec_id", "embedding").repartition(4)
+    val nBits = Ann.autoBits(all.length.toLong)
+    val sigs = df.select(col("vec_id"),
+        Native.lshSignatures(col("embedding"), 64, nBits, 32, 42L)
+          .as("sigs"))
+      .as[(Long, Array[Long])].collect()
+    val buckets = sigs.toSeq.flatMap { case (id, ss) =>
+        ss.zipWithIndex.map { case (sg, t) => ((t, sg), id) } }
+      .groupBy(_._1).values.map(_.map(_._2))
+    val shared = scala.collection.mutable.Map
+      .empty[(Long, Long), Int].withDefaultValue(0)
+    buckets.foreach { ms =>
+      for (a <- ms; b <- ms if a != b) shared((a, b)) += 1 }
+    val copyPairs = base.take(2).map(_._1).zip(extra.map(_._1))
+    assert(copyPairs.forall(p => shared(p) >= 2),
+      "a near-copy pair should collide in several tables")
+    val vec = all.toMap
+    def cos(a: Long, b: Long): Double = {
+      val (x, y) = (vec(a), vec(b))
+      def dot(p: Array[Float], q: Array[Float]) =
+        p.indices.foldLeft(0.0)((s, i) => s + p(i).toDouble * q(i).toDouble)
+      val raw = dot(x, y) / (math.sqrt(dot(x, x)) * math.sqrt(dot(y, y)))
+      java.math.BigDecimal.valueOf(raw)
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+    }
+    val want = shared.keys.groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (q, ps) =>
+        ps.map(_._2).toSeq.map(n => (n, cos(q, n)))
+          .sortBy { case (n, c) => (-c, n) }.take(5).zipWithIndex
+          .map { case ((n, c), r) => (q, n, c, r + 1) }
+      }
+    val got = Ann.approxNeighbors(df, "vec_id", "embedding", 5)
+      .as[(Long, Long, Double, Int)].collect().toSeq
+    assert(got == want)
+  }
+
+  test("block kernel: scores and order equal the pairCosCol ranking, " +
+      "ties and NULL-scoring members (ragged, NULL element, NULL vector) " +
+      "included") {
+    import graft.functions.{BlockTopK, Native}
+    import graft.queries.DedupQueries.pairCosCol
+    def vec(seed: Int, n: Int = 64): Seq[Option[Float]] =
+      (0 until n).map(j => Some((((seed * 31 + j * 17) % 13) - 6) * 0.1f))
+    val a = vec(1)
+    val rows: Seq[(Long, Option[Seq[Option[Float]]])] = Seq(
+      0L -> Some(vec(2)), 3L -> Some(a), 5L -> Some(vec(3, 63)),
+      6L -> Some(vec(4).updated(7, None)), 8L -> Some(a),
+      9L -> Some(a.map(_.map(-_))), 11L -> Some(vec(5)), 12L -> None)
+    val mem = rows.toDF("id", "e")
+      .select(col("id"), col("e"), Native.l2NormF(col("e")).as("n"))
+    val block = mem.agg(collect_list(struct(col("id"), col("e"), col("n")))
+      .as("ms"))
+    def pairs(q: org.apache.spark.sql.DataFrame) = q
+      .crossJoin(mem)
+      .select(col("qid"), col("id"),
+        pairCosCol(col("e1"), col("n1"), col("e"), col("n")).as("cos"))
+    val query = mem.filter(col("id") === 0L)
+      .select(col("id").as("qid"), col("e").as("e1"), col("n").as("n1"))
+    for (k <- Seq(3, 10)) {
+      val want = pairs(query).filter(col("id") > col("qid"))
+        .orderBy(col("cos").desc, col("id")).limit(k)
+        .select("id", "cos").collect().toSeq
+      val got = query.crossJoin(block)
+        .select(explode(BlockTopK.queryTopK(col("qid"), col("e1"),
+          col("n1"), col("ms"), k)).as("t"))
+        .select("t.id", "t.cos").collect().toSeq
+      assert(got == want, s"k=$k")
+      val everyQ = mem.select(col("id").as("qid"), col("e").as("e1"),
+        col("n").as("n1"))
+      val wantN = pairs(everyQ).filter(col("id") =!= col("qid"))
+        .withColumn("r", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("qid")
+            .orderBy(col("cos").desc, col("id"))))
+        .filter(col("r") <= k).orderBy("qid", "r")
+        .select("qid", "id", "cos").collect().toSeq
+      val gotN = block
+        .select(explode(BlockTopK.neighbours(col("ms"), k)).as("b"))
+        .select(col("b.qid"), explode(col("b.top")).as("t"))
+        .select("qid", "t.id", "t.cos").collect().toSeq
+      assert(gotN == wantN, s"neighbours k=$k")
+    }
   }
 
   test("approx percentile tracks the exact percentile within 2%") {
