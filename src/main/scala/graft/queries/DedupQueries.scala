@@ -10,9 +10,10 @@ import graft.engine.Tables._
   *
   * Scale design:
   *  - exact dedup: hash-groupBy — shuffles only (hash, doc_id) pairs.
-  *  - n-gram Jaccard: shingle-explode + equi-join on shingle. This is the
-  *    exact ground truth; it is quadratic per shared shingle, so at
-  *    100 TB you run [[q_dedup_minhash]] instead and reserve this for
+  *  - n-gram Jaccard: shingle-explode + per-shingle pair generation
+  *    on one representative per distinct text. This is the exact
+  *    ground truth; it is quadratic per shared shingle, so at 100 TB
+  *    you run [[q_dedup_minhash]] instead and reserve this for
   *    candidate verification.
   *  - MinHash-LSH: per-doc signature (narrow map), band-explode, and an
   *    equi-join on (band, signature) — no all-pairs stage anywhere, the
@@ -24,28 +25,21 @@ import graft.engine.Tables._
   */
 object DedupQueries extends QSet {
 
-  /** (doc_id, tk: array<string>) tokenization shared by shingle queries. */
-  private def tokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-      .filter(size(col("tk")) >= 3)
-
-  /** Distinct 3-gram shingles per doc: (doc_id, sh). Spark arrays are
-    * 0-indexed (DuckDB's are 1-indexed — the oracle shifts accordingly).
-    */
+  /** Distinct 3-gram shingles per doc: (doc_id, sh). */
   private def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesOf(t(s, dir, "documents"))
 
-  /** Same shingle pipeline over an arbitrary (doc_id, text) frame —
-    * the exact-group representatives, for the compressed ground-truth
-    * paths below. */
+  /** The shingle array of a text column: its space-split tokens'
+    * distinct word 3-grams in first-occurrence order, from the native
+    * [[graft.functions.ShingleKernels.trigrams]] kernel. Texts of fewer
+    * than three tokens give an empty array, NULL text a NULL one. */
+  private def trigramsOf(text: Column): Column =
+    graft.functions.ShingleKernels.trigrams(split(text, " "))
+
+  /** Same shingle pipeline over an arbitrary (doc_id, text) frame:
+    * (doc_id, sh), one row per distinct shingle of each doc. */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, size(tk) - 3), i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))")))
-        .as("sh"))
+    docs.select(col("doc_id"), explode(trigramsOf(col("text"))).as("sh"))
 
   private val MinhashPerms = 32
   private val Bands = 8 // × 4 rows per band
@@ -270,18 +264,6 @@ object DedupQueries extends QSet {
     if (merge) graft.functions.Native.intersectSizeSorted(a1, a2)
     else size(array_intersect(a1, a2)).cast(LongType)
 
-  /** Per-shingle document-frequency bound for the in-row grouped pair
-    * generator in [[ngramPairs]]: a shingle group of frequency f holds
-    * an f-length doc array in one row (linear — fine) but generates up
-    * to f²/2 in-row pair structs. At 1024 that worst case is ~0.5M
-    * 4-long structs (~16 MB, one row) — the most a single task should
-    * ever materialize; groups past the bound route through the
-    * streaming sort-merge self-join branch, which buffers only the
-    * per-key match side (linear in f) and streams the quadratic pair
-    * output through the downstream partial aggregate.
-    */
-  private[graft] val HotShingleDf = 1024
-
   def cosineTopK(s: SparkSession, dir: String, k: Int,
       maxRows: Long = AllPairsMaxRows): DataFrame = {
     val vn = guardAllPairs(
@@ -301,179 +283,136 @@ object DedupQueries extends QSet {
       .limit(k)
   }
 
-  /** Exact 3-gram Jaccard ≥ 0.8 near-dup pairs (d1 < d2): the ground
-    * truth the approximate operators are measured against. The shingle
-    * explode feeds three consumers (both self-join sides + the size
-    * aggregate); persisting computes the tokenize/shingle/distinct
-    * pipeline once. Bounded: the shingle set, not the corpus.
+  /** CACHE LIFECYCLE (the one place this policy lives): the exact-dup
+    * frame ([[textGroups]]) and the pair expansion ([[expandRepPairs]])
+    * are lazy, and so are [[ngramPairs]] and [[containmentPairs]] end
+    * to end: building them runs no Spark job beyond `Tables.t`'s
+    * schema read, and every stage runs inside the caller's action,
+    * where its metrics show. The prefix-filter, containment-prefix,
+    * minhash-verify and incremental queries persist the per-query
+    * shingle, docArr and candidate frames that several joins read, for
+    * the duration of ONE query execution, and deliberately do NOT
+    * unpersist — the returned DataFrame is lazy, so there is no
+    * in-query point after the action where the query itself could
+    * release them. The harness-side contract is that the caller clears
+    * between queries: Bench.scala and Verify.scala call
+    * `spark.catalog.clearCache()` after every query action. A
+    * long-lived interactive session embedding this library should do
+    * the same, or rely on Spark's LRU eviction — every persist here is
+    * the default MEMORY_AND_DISK and an optimization only, never a
+    * correctness requirement.
     */
-  /** Exact-duplicate text groups: (groups = gkey/rep/gn, members =
-    * gkey/doc_id, repDocs = the one doc per distinct text). The
-    * ground-truth pair scans below run on REPRESENTATIVES only and
-    * expand back through the membership — the production pipeline
-    * order (exact dedup BEFORE near-dup detection), and the reason the
-    * shingle self-join's cost tracks DISTINCT texts instead of growing
-    * quadratically with duplicate multiplicity (measured at the
-    * 10×-duplicated sf1.0: 19.3 s / 33.2 s for jaccard / containment
-    * on raw rows vs 2-3 s compressed, identical output).
+  /** Exact-duplicate text groups as ONE lazy aggregate with one row per
+    * distinct (non-NULL) text: `rep` (its smallest doc_id, the group's
+    * representative), `gn` (its multiplicity), `ids` (every member
+    * doc_id, ascending), `arr` (the text's distinct 3-gram shingles,
+    * from the native kernel) and `sz` (= size(arr), in-row). Grouping
+    * is by the text itself, so it is exact. The ground-truth pair scans
+    * below run on representatives only and expand back through `ids`:
+    * the production pipeline order (exact dedup BEFORE near-dup
+    * detection), and the reason the shingle pair stage's cost tracks
+    * DISTINCT texts instead of growing quadratically with duplicate
+    * multiplicity (measured at the 10×-duplicated sf1.0: 19.3 s /
+    * 33.2 s for jaccard / containment on raw rows vs 2-3 s compressed,
+    * identical output). Shingles are computed once per distinct text,
+    * after the aggregate; the member array is linear in its group's
+    * multiplicity. NULL texts have no shingles and form no group, so
+    * they pair with nothing and label no component.
     */
-  /** CACHE LIFECYCLE (the one place this policy lives — every persist
-    * in this file follows it): dedup queries persist shared
-    * intermediates (groups/members/repDocs here; per-query shingle,
-    * size, prefix, docArr and candidate frames) for the duration of
-    * ONE query execution and deliberately do NOT unpersist — the
-    * returned DataFrame is lazy, so there is no in-query point after
-    * the action where the query itself could release them. The
-    * harness-side contract is that the caller clears between queries:
-    * Bench.scala and Verify.scala call `spark.catalog.clearCache()`
-    * after every query action (measured: without it, later queries
-    * slow under accumulated cache pressure). A long-lived interactive
-    * session embedding this library should do the same, or rely on
-    * Spark's LRU eviction — every persist here is the default
-    * MEMORY_AND_DISK and an optimization only, never a correctness
-    * requirement.
-    */
-  private[graft] def textGroups(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("text"), md5(col("text")).as("gkey"))
-    // groups and members persist too (round 8): expandRepPairs reads
-    // groups twice (repToG + selfPairs) and members twice (both pair
-    // sides), so the md5 scan + group-by subtree otherwise recomputes
-    // ~4× per dedup query — interleaved A/B on q_dedup_near_ngram at
-    // sf0.1: 2.16 s vs 2.52 s medians. groups is one row per DISTINCT
-    // text; members is (gkey, doc_id) — corpus-row-count-sized but
-    // 2-column-narrow, and MEMORY_AND_DISK caching is an optimization,
-    // not a correctness requirement, so a 100 TB deployment can evict
-    // it freely.
-    val groups = docs.groupBy("gkey")
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gn"))
-      .persist()
-    // persisted: the rep frame feeds the shingle pipeline (twice in the
-    // minhash path — signatures AND verify) and re-deriving it re-pays
-    // the md5 group-by per consumer
-    val repDocs = docs.join(groups.select(col("gkey"),
-        col("rep").as("doc_id")), Seq("gkey", "doc_id"))
-      .select("doc_id", "text").persist()
-    (groups, docs.select("gkey", "doc_id").persist(), repDocs)
-  }
+  private[graft] def textGroups(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .filter(col("text").isNotNull)
+      .groupBy(col("text"))
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gn"),
+        sort_array(collect_list(col("doc_id"))).as("ids"))
+      .select(col("rep"), col("gn"), col("ids"),
+        trigramsOf(col("text")).as("arr"))
+      .withColumn("sz", size(col("arr")).cast(LongType))
 
-  /** Expand representative-level pairs back to ALL doc pairs (d1 < d2):
-    * cross-group pairs carry the rep pair's exact metric to every
-    * member combination; within-group pairs (identical texts) have
-    * intersection = the group's shingle-set size and metric exactly
-    * 1.0 — which passes every ≥-threshold filter, so expansion after
-    * the rep-level filter loses nothing. Groups whose text yields no
-    * shingles are absent from `sizes` and drop out, matching the raw
-    * formulation (no shingle rows → no pairs).
+  /** (doc_id, sh) over the representatives of [[textGroups]]. */
+  private def repShingles(groups: DataFrame): DataFrame =
+    groups.select(col("rep").as("doc_id"), explode(col("arr")).as("sh"))
+
+  /** Expand representative-level pairs `(r1 < r2, inter, metric)` back
+    * to ALL doc pairs (d1 < d2). Cross-group pairs carry the rep pair's
+    * exact metric to every member combination; within-group pairs
+    * (identical texts) have intersection = the group's shingle-set
+    * size and metric exactly 1.0 — which passes every ≥-threshold
+    * filter, so expansion after the rep-level filter loses nothing.
+    * Only multi-member groups have anything to expand, so the member
+    * arrays come from ONE left join per pair side against the
+    * `gn ≥ 2` rows of `groups` (a singleton's members are just its
+    * rep), and the member combinations are two in-row explodes.
+    * Identical-text groups enter as rep SELF-pairs and ride the same
+    * expansion; `r1 ≠ r2 || da < db` keeps each unordered doc pair
+    * exactly once in both cases. Groups whose text yields no shingles
+    * (sz = 0) pair with nothing, matching the raw formulation.
     */
   private[graft] def expandRepPairs(repPairs: DataFrame, groups: DataFrame,
-      members: DataFrame, sizes: DataFrame, metric: String): DataFrame = {
-    val repToG = groups.select(col("rep"), col("gkey"))
-    // identical-text groups enter as rep SELF-pairs (metric exactly 1.0
-    // passes every ≥-threshold filter; intersection = the group's
-    // shingle-set size) and ride the same expansion joins as the cross
-    // pairs — the gk1 ≠ gk2 || da < db filter keeps each unordered doc
-    // pair exactly once in both cases
-    val selfPairs = groups.filter(col("gn") >= 2)
-      .join(sizes.select(col("doc_id").as("rep"), col("sz")), "rep")
+      metric: String): DataFrame = {
+    val multi = groups.filter(col("gn") >= 2)
+    val selfPairs = multi.filter(col("sz") > 0)
       .select(col("rep").as("r1"), col("rep").as("r2"),
         col("sz").as("inter"), lit(1.0).as(metric))
+    def members(side: String): DataFrame =
+      multi.select(col("rep").as(s"r$side"), col("ids").as(s"m$side"))
     repPairs.unionAll(selfPairs)
-      .join(repToG.select(col("rep").as("r1"), col("gkey").as("gk1")),
-        "r1")
-      .join(repToG.select(col("rep").as("r2"), col("gkey").as("gk2")),
-        "r2")
-      .join(members.select(col("gkey").as("gk1"),
-        col("doc_id").as("da")), "gk1")
-      .join(members.select(col("gkey").as("gk2"),
-        col("doc_id").as("db")), "gk2")
-      .filter(col("gk1") =!= col("gk2") || col("da") < col("db"))
+      .join(members("1"), Seq("r1"), "left")
+      .join(members("2"), Seq("r2"), "left")
+      .select(col("r1"), col("r2"), col("inter"), col(metric), col("m2"),
+        explode(coalesce(col("m1"), array(col("r1")))).as("da"))
+      .select(col("r1"), col("r2"), col("inter"), col(metric), col("da"),
+        explode(coalesce(col("m2"), array(col("r2")))).as("db"))
+      .filter(col("r1") =!= col("r2") || col("da") < col("db"))
       .select(least(col("da"), col("db")).as("d1"),
         greatest(col("da"), col("db")).as("d2"),
         col("inter"), col(metric))
   }
 
-  def ngramPairs(s: SparkSession, dir: String): DataFrame = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
-    // persisted (tiny: one (doc, long) row per rep doc): read by the
-    // size-attach join, the selfPairs leg of expandRepPairs, and the
-    // hint guard's count
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz")).persist()
-    val nDocs = sizes.count()
-    // Attach each doc's shingle-set size BEFORE pair generation (sizes
-    // is one tiny row per doc — hint-broadcast while its count stays
-    // under the guard; past it AQE picks from runtime sizes), so the
-    // Jaccard length bound prunes in-row and the two post-aggregation
-    // size joins disappear (sz1/sz2 ride the groupBy keys). (Computing
-    // sz in-row via size(array) before the explode was measured 2.4×
-    // SLOWER: size() and explode() land in different operators, so the
-    // transform+array_distinct array build runs twice per row.)
-    // xxhash64(sh) leads the group-by key so the shuffle hashes and the
-    // aggregate compares a fixed-width long first, falling back to the
-    // string only on hash-equal rows; the string stays in the key, so
-    // the pair set is still EXACT — the hash only accelerates.
-    val shs = sh.join(maybeBroadcast(sizes, nDocs), "doc_id")
-    // Pair generation is ONE shuffle on the shingle hash + an in-row
-    // pair transform per shingle group (normalize each unordered pair
-    // with the doc-id swap so r1 < r2; the jaccard length bound —
-    // jaccard ≤ min(sz)/max(sz), so ≥ 0.8 needs 5·min ≥ 4·max — prunes
-    // INSIDE the inner per-element transform, so pruned pairs never
-    // allocate a struct and the flattened array holds only survivors).
-    // The previous hash-led sort-merge SELF-join shuffled the shingle
-    // frame twice and sorted both sides; interleaved A/B at sf0.1:
-    // 3.46 s vs 4.00 s medians.
-    // Memory shape: the per-group doc array is linear in that shingle's
-    // document frequency; the in-row pair list is frequency². Groups at
-    // df ≤ HotShingleDf take the in-row branch (bounded single-row
-    // cost); HOT groups — a boilerplate gram shared corpus-wide that
-    // exact-group compression could not fold because the surrounding
-    // texts differ — are routed through the streaming SMJ self-join,
-    // which never materializes the quadratic pair set in one row. The
-    // split is deterministic (size(ds) vs the constant), both branches
-    // share one persisted grouped frame, and the union feeds the same
-    // exact intersection count. This query is the exhaustive
-    // verification baseline either way — the scale paths are the
-    // banded/prefix-filtered candidates.
-    val grouped = shs
+  /** Representative pairs sharing at least one shingle, with sizes
+    * `den·min(sz) ≥ num·max(sz)`: (r1 < r2, sz1, sz2, inter), `inter`
+    * the number of shingles they share. Each representative's shingles
+    * explode with its in-row size; ONE shuffle on the shingle
+    * (xxhash64(sh) leads the key so the shuffle hashes and the
+    * aggregate compares a fixed-width long first; the string stays in
+    * the key, so the pair set is EXACT) collects each shingle's
+    * (doc_id, sz) members; the native
+    * [[graft.functions.ShingleKernels.boundedPairs]] generator streams
+    * the member pairs within the bound, normalized r1 < r2; and a
+    * group-by on the pair counts the intersection. The generator holds
+    * only the f member ids and sizes of a shingle of document
+    * frequency f, so a boilerplate gram shared corpus-wide never
+    * materializes its f² pairs in one row.
+    */
+  private def sharedShinglePairs(groups: DataFrame, num: Int,
+      den: Int): DataFrame =
+    groups
+      .select(col("rep"), col("sz"), explode(col("arr")).as("sh"))
       .groupBy(xxhash64(col("sh")).as("hb"), col("sh"))
-      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-      .persist()
-    val coldPairs = grouped.filter(size(col("ds")) <= HotShingleDf)
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(
-          |    filter(slice(ds, i + 2, size(ds) - i - 1), y ->
-          |      x.sz * 5 >= y.sz * 4 AND y.sz * 5 >= x.sz * 4),
-          |    y -> if(x.doc_id < y.doc_id,
-          |            struct(x.doc_id AS r1, y.doc_id AS r2,
-          |                   x.sz AS sz1, y.sz AS sz2),
-          |            struct(y.doc_id AS r1, x.doc_id AS r2,
-          |                   y.sz AS sz1, x.sz AS sz2)))))
-          |""".stripMargin)).as("p"))
-      .select(col("p.r1").as("r1"), col("p.r2").as("r2"),
-        col("p.sz1").as("sz1"), col("p.sz2").as("sz2"))
-    val hotRows = grouped.filter(size(col("ds")) > HotShingleDf)
-      .select(col("hb"), col("sh"), explode(col("ds")).as("d"))
-      .select(col("hb"), col("sh"), col("d.doc_id").as("doc_id"),
-        col("d.sz").as("sz"))
-    val hotPairs = hotRows.select(col("doc_id").as("r1"), col("hb"),
-        col("sh"), col("sz").as("sz1"))
-      .join(hotRows.select(col("doc_id").as("r2"), col("hb").as("hb2"),
-        col("sh").as("sh2"), col("sz").as("sz2")),
-        col("hb") === col("hb2") && col("sh") === col("sh2") &&
-          col("r1") < col("r2") &&
-          col("sz1") * 5 >= col("sz2") * 4 &&
-          col("sz2") * 5 >= col("sz1") * 4)
-      .select("r1", "r2", "sz1", "sz2")
-    val repPairs = coldPairs.unionAll(hotPairs)
+      .agg(collect_list(struct(col("rep").as("doc_id"), col("sz")))
+        .as("ds"))
+      .select(graft.functions.ShingleKernels.boundedPairs(col("ds"), num,
+        den))
       .groupBy("r1", "r2", "sz1", "sz2").agg(count(lit(1)).as("inter"))
+
+  /** Exact 3-gram Jaccard ≥ 0.8 near-dup pairs (d1 < d2): the ground
+    * truth the approximate operators are measured against. One lazy
+    * plan over [[textGroups]]: [[sharedShinglePairs]] under the Jaccard
+    * length bound (jaccard ≤ min(sz)/max(sz), so ≥ 0.8 needs
+    * 5·min ≥ 4·max), the exact Jaccard filter, then
+    * [[expandRepPairs]]. No frame is persisted and nothing is counted
+    * to size a join: AQE chooses the joins from runtime sizes. This
+    * query is the exhaustive verification baseline — the scale paths
+    * are the banded/prefix-filtered candidates.
+    */
+  def ngramPairs(s: SparkSession, dir: String): DataFrame = {
+    val groups = textGroups(s, dir)
+    val repPairs = sharedShinglePairs(groups, 4, 5)
       .withColumn("jaccard",
         col("inter").cast(DoubleType) / (col("sz1") + col("sz2") - col("inter")))
       .filter(col("jaccard") >= 0.8)
       .select("r1", "r2", "inter", "jaccard")
-    expandRepPairs(repPairs, groups, members, sizes, "jaccard")
+    expandRepPairs(repPairs, groups, "jaccard")
   }
 
   /** Exact 3-gram jaccard ≥ 0.8 pairs via PREFIX FILTERING — the
@@ -508,9 +447,8 @@ object DedupQueries extends QSet {
       hintCands: Boolean = HintVerifyCands,
       mergeIntersect: Boolean = false,
       hashOnlyCands: Boolean = true): DataFrame = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val groups = textGroups(s, dir)
+    val sh = repShingles(groups).persist()
     // global document frequency = the canonical rare-first token order;
     // vocab-bounded, joined back by shingle (keyed shuffle — the vocab
     // of a 100 TB corpus outgrows a broadcast)
@@ -524,8 +462,8 @@ object DedupQueries extends QSet {
     // per-doc row_number window (a full shuffle + sort of the ranked
     // token stream) AND the separate verify-side docArr aggregate
     // (a second full shuffle of the shingle stream) both collapse into
-    // this one groupBy. sz = size(fa) in-row (shinglesOf emits
-    // distinct shingles per doc), so the sizes broadcast join
+    // this one groupBy. sz = size(fa) in-row (each representative's
+    // shingles are distinct), so the sizes broadcast join
     // disappears too. Persisted: the candidate self-join reads the
     // exploded prefix twice and the verify join reads the full arrays
     // twice.
@@ -595,41 +533,29 @@ object DedupQueries extends QSet {
         (size(col("a1")) + size(col("a2")) - col("inter")))
       .filter(col("jaccard") >= 0.8)
       .select("r1", "r2", "inter", "jaccard")
-    expandRepPairs(repPairs, groups, members, sizes, "jaccard")
+    expandRepPairs(repPairs, groups, "jaccard")
       .select("d1", "d2", "inter", "jaccard")
       .orderBy("d1", "d2")
   }
 
-  /** Exact 3-gram containment ≥ 0.9 pairs (d1 < d2): same candidate
-    * machinery as [[ngramPairs]] (hash-led shingle equi-join), minus
-    * the Jaccard size-ratio prune — containment has no size bound (a
-    * tiny doc inside a huge one is exactly the positive case), so
-    * every gram-sharing pair is a candidate. At 100 TB the banded
-    * analogue signs ONLY the smaller set's minhash per pair-direction
-    * (containment LSH); this exact form is the verification tier, and
-    * stays bounded by the shared-gram pair count like the Jaccard
-    * ground truth.
+  /** Exact 3-gram containment ≥ 0.9 pairs (d1 < d2): the same lazy plan
+    * as [[ngramPairs]] minus the Jaccard size-ratio prune — containment
+    * has no size bound (a tiny doc inside a huge one is exactly the
+    * positive case), so [[sharedShinglePairs]] runs with bound (0, 1)
+    * and every gram-sharing pair is a candidate. No persist, no count,
+    * no hint. At 100 TB the banded analogue signs ONLY the smaller
+    * set's minhash per pair-direction (containment LSH); this exact
+    * form is the verification tier, and stays bounded by the
+    * shared-gram pair count like the Jaccard ground truth.
     */
   def containmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
-    // persisted for the same three consumers as ngramPairs (size
-    // attach, selfPairs, hint-guard count)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz")).persist()
-    val shs = sh.join(maybeBroadcast(sizes, sizes.count()), "doc_id")
-      .withColumn("hb", xxhash64(col("sh")))
-    val repPairs = shs.select(col("doc_id").as("r1"), col("hb"),
-        col("sh"), col("sz").as("sz1"))
-      .join(shs.select(col("doc_id").as("r2"), col("hb").as("hb2"),
-        col("sh").as("sh2"), col("sz").as("sz2")),
-        col("hb") === col("hb2") && col("sh") === col("sh2") &&
-          col("r1") < col("r2"))
-      .groupBy("r1", "r2", "sz1", "sz2").agg(count(lit(1)).as("inter"))
+    val groups = textGroups(s, dir)
+    val repPairs = sharedShinglePairs(groups, 0, 1)
       .withColumn("containment",
         col("inter").cast(DoubleType) / least(col("sz1"), col("sz2")))
       .filter(col("containment") >= 0.9)
       .select("r1", "r2", "inter", "containment")
-    expandRepPairs(repPairs, groups, members, sizes, "containment")
+    expandRepPairs(repPairs, groups, "containment")
       .select(col("d1"), col("d2"), col("inter"), col("containment"))
       .orderBy("d1", "d2")
   }
@@ -656,17 +582,17 @@ object DedupQueries extends QSet {
       hintCands: Boolean = true,
       mergeIntersect: Boolean = false,
       hashOnlyCands: Boolean = true): DataFrame = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
+    val groups = textGroups(s, dir)
+    val sh = repShingles(groups).persist()
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("dfq"))
     // ONE per-doc aggregate serves every stage (same collapse as
     // prefixFilterPairs): the sorted (dfq, sh) array yields the
     // rare-first prefix (length |x| − ⌈0.9·|x|⌉ + 1; ⌈9·sz/10⌉ =
     // (9·sz + 9) div 10) as an in-row slice, the posting-list ("full
     // token set") side of the candidate join as an in-row transform +
-    // explode, the verify arrays, and the selfPairs sizes — the r8
-    // shape paid a rank window plus a second docArr aggregate plus two
-    // sizes broadcast joins for the same four consumers
+    // explode, and the verify arrays — the r8 shape paid a rank window
+    // plus a second docArr aggregate plus two sizes broadcast joins for
+    // the same consumers
     // arr order: see prefixFilterPairs — lexicographic on the merge
     // package (the walk's precondition), dfq-projected otherwise;
     // set-equal either way.
@@ -746,9 +672,7 @@ object DedupQueries extends QSet {
         least(size(col("a1")), size(col("a2"))))
       .filter(col("containment") >= 0.9)
       .select("r1", "r2", "inter", "containment")
-    val sizes = docArr.select(col("doc_id"),
-      size(col("arr")).cast(LongType).as("sz"))
-    expandRepPairs(repPairs, groups, members, sizes, "containment")
+    expandRepPairs(repPairs, groups, "containment")
       .select(col("d1"), col("d2"), col("inter"), col("containment"))
       .orderBy("d1", "d2")
   }
@@ -789,7 +713,7 @@ object DedupQueries extends QSet {
     // expand through the membership afterwards instead of iterating
     // over duplicate-inflated edges (the expansion pairs would multiply
     // edge volume by multiplicity² for zero extra information).
-    val (repPairs, groups, members, _) =
+    val (repPairs, groups) =
       verifiedRepContext(s, dir, hintCands, mergeVerify)
     val pairs = repPairs.select(col("r1").as("d1"), col("r2").as("d2"))
     // Iterate ONLY over edge-endpoint vertices: isolated documents are
@@ -895,11 +819,11 @@ object DedupQueries extends QSet {
     edgesR.unpersist(blocking = false)
     pairRdd.unpersist(blocking = false)
     // Expand rep labels to every document through the exact-dup
-    // membership; groups whose rep touched no edge (including gn ≥ 2
+    // member arrays; groups whose rep touched no edge (including gn ≥ 2
     // identical-text cliques) default to their own rep — which is the
     // group's min doc_id, exactly the label the doc-level iteration
     // would have produced.
-    val all = members.join(groups.select("gkey", "rep"), "gkey")
+    val all = groups.select(col("rep"), explode(col("ids")).as("doc_id"))
       .join(labelDf.withColumnRenamed("doc_id", "rep"), Seq("rep"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("rep")).as("rep_id"))
@@ -968,13 +892,11 @@ object DedupQueries extends QSet {
     */
   def minhashCandidates(s: SparkSession, dir: String,
       bands: Int = Bands): DataFrame = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val repPairs = bucketPairs(minhashBuckets(sh, bands))
+    val groups = textGroups(s, dir)
+    val repPairs = bucketPairs(minhashBuckets(repShingles(groups), bands))
       .select(col("d1").as("r1"), col("d2").as("r2"),
         lit(0L).as("inter"), lit(1.0).as("m"))
-    expandRepPairs(repPairs, groups, members, sizes, "m")
+    expandRepPairs(repPairs, groups, "m")
       .select("d1", "d2").orderBy("d1", "d2")
   }
 
@@ -1297,7 +1219,7 @@ object DedupQueries extends QSet {
     * stream.
     */
   /** Shared representative-level LSH + verify context: (verified rep
-    * pairs, groups, members, rep shingle sizes). Identical texts carry
+    * pairs, [[textGroups]]). Identical texts carry
     * identical minhash signatures, so raw-row banding grows
     * quadratically with duplicate multiplicity for no information —
     * the pipeline runs on one doc per distinct text (measured at the
@@ -1307,10 +1229,9 @@ object DedupQueries extends QSet {
   private[graft] def verifiedRepContext(s: SparkSession, dir: String,
       hintCands: Boolean = HintVerifyCands,
       mergeIntersect: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (groups, members, repDocs) = textGroups(s, dir)
-    val sh = shinglesOf(repDocs).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+      : (DataFrame, DataFrame) = {
+    val groups = textGroups(s, dir)
+    val sh = repShingles(groups).persist()
     // the signature pass reads the PERSISTED shingle frame: verify
     // materializes it anyway, so re-fusing tokenize→shingle→hash from
     // the scan (the q_dedup_minhash-alone trade) pays the string pass
@@ -1320,7 +1241,7 @@ object DedupQueries extends QSet {
       bucketPairs(minhashBuckets(sh, bands = 16))
         .select(col("d1").as("r1"), col("d2").as("r2")),
       "r1", "r2", hintCands, mergeIntersect)
-    (repPairs, groups, members, sizes)
+    (repPairs, groups)
   }
 
   /** Group-level output of the verified LSH pipeline: one row per
@@ -1337,7 +1258,7 @@ object DedupQueries extends QSet {
     */
   def minhashVerifiedGroupPairs(s: SparkSession, dir: String,
       hintCands: Boolean = HintVerifyCands): DataFrame = {
-    val (repPairs, groups, _, _) = verifiedRepContext(s, dir, hintCands)
+    val (repPairs, groups) = verifiedRepContext(s, dir, hintCands)
     repPairs
       .join(groups.select(col("rep").as("r1"), col("gn").as("n1")), "r1")
       .join(groups.select(col("rep").as("r2"), col("gn").as("n2")), "r2")
@@ -1349,9 +1270,9 @@ object DedupQueries extends QSet {
   def minhashVerifiedPairs(s: SparkSession, dir: String,
       hintCands: Boolean = HintVerifyCands,
       mergeIntersect: Boolean = false): DataFrame = {
-    val (repPairs, groups, members, sizes) =
+    val (repPairs, groups) =
       verifiedRepContext(s, dir, hintCands, mergeIntersect)
-    expandRepPairs(repPairs, groups, members, sizes, "jaccard")
+    expandRepPairs(repPairs, groups, "jaccard")
       .orderBy("d1", "d2")
   }
 

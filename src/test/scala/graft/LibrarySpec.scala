@@ -798,17 +798,16 @@ class LibrarySpec extends AnyFunSuite {
       s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
   }
 
-  test("shingle-skew stress past HotShingleDf: the streaming SMJ hot " +
-    "branch fires and the union still matches brute force") {
-    // round-9: the hot/cold split is automatic — groups above
-    // HotShingleDf route through the streaming self-join instead of
-    // the in-row pair array. Build a corpus whose boilerplate trigram
-    // is shared by MORE distinct texts than the threshold (so the hot
-    // branch genuinely executes, not just compiles) while the
-    // cluster-local grams stay cold — both branches and their union
-    // are then exercised against per-pair brute force.
+  test("shingle-skew stress past 1,024 members: one gram shared by " +
+    "1,052 distinct texts still matches brute force") {
+    // the pair generator streams a shingle group's pairs instead of
+    // building them in one row; build a corpus whose boilerplate
+    // trigram is shared by more than 1,024 distinct texts (the bound
+    // past which the former in-row pair array handed a group to a
+    // separate sort-merge branch) while the cluster-local grams stay
+    // small, and check the whole pipeline against per-pair brute force
     import graft.queries.DedupQueries
-    val nClusters = (DedupQueries.HotShingleDf / 4) + 7 // 4·n > threshold
+    val nClusters = 263 // 4 · 263 = 1,052 texts share the boiler gram
     val boiler = "common boiler plate"
     def base(c: Int) =
       s"$boiler " + (1 to 9).map(i => s"c${c}w$i").mkString(" ")
@@ -820,8 +819,6 @@ class LibrarySpec extends AnyFunSuite {
     }).toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = "/tmp/graft_skewfx_hot"
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(nClusters * 4 > DedupQueries.HotShingleDf,
-      "fixture must push the boiler gram past the hot threshold")
     val got = DedupQueries.ngramPairs(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1133,5 +1130,93 @@ class LibrarySpec extends AnyFunSuite {
       DedupQueries.containmentPrefixPairs(spark, sf,
         mergeIntersect = false).collect().map(_.toSeq).toSeq)
     spark.catalog.clearCache()
+  }
+
+  test("native trigram kernel: element for element the lambda shingle " +
+    "expression on the fixture documents and on edge texts") {
+    import graft.functions.ShingleKernels
+    // the higher-order form the kernel replaced, kept here only as the
+    // reference
+    val reference = expr("array_distinct(transform(sequence(0, " +
+      "size(tk) - 3), i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))")
+    val fixture = Tables.t(spark, sf, "documents").select(col("text"))
+    val edges = Seq[String](
+      "one two three", //                       exactly 3 tokens
+      "a b c a b c a b c a b", //               repeated grams
+      "x y x y x y x", //                       repeated, overlapping
+      "alpha  beta gamma  delta", //             empty tokens (double spaces)
+      "  lead and trail  ", //                   empty tokens at the ends
+      null).toDF("text") //                      NULL text
+    val both = fixture.unionByName(edges)
+      .select(col("text"), split(col("text"), " ").as("tk"))
+      .filter(size(col("tk")) >= 3 || col("tk").isNull)
+      .select(col("text"), ShingleKernels.trigrams(col("tk")).as("got"),
+        reference.as("want"))
+    val diff = both.filter(!(col("got") <=> col("want"))).collect()
+    assert(diff.isEmpty, diff.take(3).mkString("\n"))
+    val byText = both.collect()
+      .map(r => Option(r.getString(0)) ->
+        Option(r.getAs[scala.collection.Seq[String]](1)).map(_.toList)
+          .orNull).toMap
+    assert(byText(Some("one two three")) == Seq("one two three"))
+    assert(byText(Some("x y x y x y x")) == Seq("x y x", "y x y"))
+    assert(byText(Some("alpha  beta gamma  delta")) ==
+      Seq("alpha  beta", " beta gamma", "beta gamma ", "gamma  delta"))
+    assert(byText(None) == null)
+    // fewer than three tokens: no grams (the reference is never
+    // evaluated there — its callers filter those rows out)
+    val short = Seq("", "a", "a b").toDF("text")
+      .select(ShingleKernels.trigrams(split(col("text"), " ")))
+      .collect().map(_.getAs[scala.collection.Seq[String]](0))
+    assert(short.forall(_.isEmpty), short.toSeq.toString)
+  }
+
+  test("native pair generator: the plain all-pairs enumeration under " +
+    "the 5:4 and the open size bound, on boundary, empty, single and " +
+    "1,100-member groups") {
+    import graft.functions.ShingleKernels
+    // plain-Scala reference: every i < j in array order whose sizes
+    // pass den·min ≥ num·max (for 4:5 the former lambda's two
+    // conditions), normalized so r1 is the smaller id
+    def reference(ms: Seq[(Long, Long)], num: Int, den: Int)
+        : Seq[(Long, Long, Long, Long)] =
+      (for {
+        i <- ms.indices; j <- (i + 1) until ms.size
+        (xi, xs) = ms(i); (yi, ys) = ms(j)
+        if xs * den >= ys * num && ys * den >= xs * num
+      } yield if (xi < yi) (xi, yi, xs, ys) else (yi, xi, ys, xs)).sorted
+    val rnd = new scala.util.Random(17)
+    val big = rnd.shuffle((1L to 1100L).toVector)
+      .map(id => id -> (8L + rnd.nextInt(8)))
+    val groups = Seq(
+      1 -> Seq((7L, 4L), (3L, 5L)), //              exactly 5:4, pairs
+      2 -> Seq((1L, 4L), (2L, 6L)), //              past 5:4, no pair
+      3 -> Seq((9L, 10L), (4L, 8L), (6L, 11L), (5L, 8L)), // mixed bounds
+      4 -> Seq.empty[(Long, Long)], //               empty group
+      5 -> Seq((42L, 7L)), //                        one member
+      6 -> big) //                                   1,100 members
+    val df = groups.toDF("g", "ms")
+    for ((num, den) <- Seq((4, 5), (0, 1))) {
+      val got = df
+        .select(col("g"), ShingleKernels.boundedPairs(col("ms"), num, den))
+        .collect()
+        .groupBy(_.getInt(0))
+        .map { case (g, rs) => g -> rs.map(r => (r.getLong(1),
+          r.getLong(2), r.getLong(3), r.getLong(4))).toSeq.sorted }
+      for ((g, ms) <- groups) {
+        val want = reference(ms, num, den)
+        val have = got.getOrElse(g, Seq.empty)
+        assert(have == want,
+          s"$num:$den group $g: got ${have.take(5)} want ${want.take(5)}")
+      }
+    }
+    assert(reference(groups(0)._2, 4, 5) == Seq((3L, 7L, 5L, 4L)))
+    assert(reference(groups(1)._2, 4, 5).isEmpty)
+    assert(reference(groups(1)._2, 0, 1).size == 1)
+    assert(reference(big, 4, 5).size > 100000, "the big group must be hot")
+    // a NULL member array emits nothing
+    val nul = Seq(Option.empty[Seq[(Long, Long)]]).toDF("ms")
+      .select(ShingleKernels.boundedPairs(col("ms"), 4, 5)).count()
+    assert(nul == 0L)
   }
 }

@@ -139,6 +139,47 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("building the exact n-gram and containment dedup queries runs " +
+    "no more Spark jobs than reading the documents table alone") {
+    // the lazy-builder gate: every stage of these two queries runs
+    // inside the caller's action, so building them may pay only the
+    // table read's own schema job
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def buildJobs(build: => Any): Int = {
+      val group = s"build-gate-${java.util.UUID.randomUUID}"
+      val marker = s"$group-marker"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val lst = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .foreach { g =>
+              if (g == group) jobs.incrementAndGet()
+              else if (g == marker) drained.countDown()
+            }
+      }
+      sc.addSparkListener(lst)
+      try {
+        sc.setJobGroup(group, "build gate")
+        try build finally sc.clearJobGroup()
+        // the bus delivers in order: once the marker job's start
+        // arrives, every job the build started has been counted
+        sc.setJobGroup(marker, "build gate marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        jobs.get()
+      } finally sc.removeSparkListener(lst)
+    }
+    val read = buildJobs(graft.engine.Tables.t(spark, sf, "documents"))
+    for (q <- Seq("q_dedup_near_ngram", "q_dedup_containment")) {
+      val built = buildJobs(SparkEntry.queries(q)(spark, sf))
+      assert(built <= read,
+        s"$q ran $built jobs while it was built; the documents read " +
+          s"alone runs $read")
+    }
+  }
+
   test("simhash and ANN banding joins are equi-joins, never all-pairs") {
     for (q <- Seq("q_dedup_simhash", "q_sim_ann_lsh")) {
       val p = plan(q)
